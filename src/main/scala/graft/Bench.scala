@@ -59,14 +59,10 @@ object Bench {
     // into later queries' timings (observed as tail-of-catalog drift).
     // Dropping caches inside the timed region is fair: each iteration
     // builds its own DataFrame, so it never reuses the previous one's.
-    def timesOf(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[Double] =
-      (0 until math.max(1, iters)).map { _ =>
-        val t0 = System.nanoTime()
+    def timesOf(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Seq[Double]] =
+      timed(iters) {
         try runPinned(spark, name)(fn(spark, sfDir).count())
-        catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        dt
+        finally spark.catalog.clearCache()
       }
     val prior = priorQueryTimes()
     // machine-phase telemetry: same-code totals on this class of VM swing
@@ -75,33 +71,39 @@ object Bench {
     // artifact alone, without an A/B re-bench
     val envStart = (java.time.Instant.now().toString, loadavg())
     var retimed = List.empty[String]
-    val results = ordered.map { case (name, fn) =>
-      val ts = timesOf(name, fn)
-      var lo = ts.min
-      var hi = ts.max
-      // outlier re-run, BOTH directions: a min-of-N more than 2× the
-      // previous round's value — or under half of it — is at the edge of
-      // the documented same-code swing on this machine (r11 showed 2-2.5×
-      // drift passing un-retimed at the old 3× trigger and landing in the
-      // judged artifact). Re-time once before reporting so a one-off
-      // GC/IO stall can't manufacture a phantom regression, and record
-      // that the re-run happened (the `retimed` field below) so the
-      // judged signal is never silently smoothed in either direction.
-      prior.get(name).filter(p => p > 0.0 && (lo > 2.0 * p || lo * 2.0 < p))
-        .foreach { p =>
-          retimed ::= s"$name:${sec3(lo)}(prior ${sec3(p)})"
-          val ts2 = timesOf(name, fn)
-          // slow direction: min over ALL samples — the re-run rescues a
-          // phantom regression. Fast direction: the re-run's own min — a
-          // one-off phantom SPEEDUP must reproduce to be kept, otherwise
-          // keeping the global min would enshrine it as the judged number
-          lo = if (lo > 2.0 * p) math.min(lo, ts2.min) else ts2.min
-          hi = math.max(hi, ts2.max)
+    val outcomes = ordered.map { case (name, fn) =>
+      name -> timesOf(name, fn).flatMap { ts =>
+        val lo = ts.min
+        // outlier re-run, BOTH directions: a min-of-N more than 2× the
+        // previous round's value — or under half of it — is at the edge of
+        // the documented same-code swing on this machine (r11 showed 2-2.5×
+        // drift passing un-retimed at the old 3× trigger and landing in the
+        // judged artifact). Re-time once before reporting so a one-off
+        // GC/IO stall can't manufacture a phantom regression, and record
+        // that the re-run happened (the `retimed` field below) so the
+        // judged signal is never silently smoothed in either direction.
+        prior.get(name).filter(p => p > 0.0 && (lo > 2.0 * p || lo * 2.0 < p)) match {
+          case None => Right((lo, ts.max))
+          case Some(p) =>
+            retimed ::= s"$name:${sec3(lo)}(prior ${sec3(p)})"
+            // slow direction: min over ALL samples — the re-run rescues a
+            // phantom regression. Fast direction: the re-run's own min — a
+            // one-off phantom SPEEDUP must reproduce to be kept, otherwise
+            // keeping the global min would enshrine it as the judged number
+            timesOf(name, fn).map(ts2 => (
+              if (lo > 2.0 * p) math.min(lo, ts2.min) else ts2.min,
+              math.max(ts.max, ts2.max)))
         }
-      (name, lo, hi)
+      }
+    }
+    val results = outcomes.collect { case (name, Right((lo, hi))) => (name, lo, hi) }
+    val failed = outcomes.collect { case (name, Left(err)) =>
+      System.err.println(s"[bench] $name failed: $err")
+      name
     }
     val (printed, full) = metricLine(results.map(r => (r._1, r._2)), sfDir,
       maxes = results.map(r => (r._1, r._3)), retimed = retimed.reverse,
+      failed = failed,
       env = Seq(("ts_start", envStart._1), ("load_start", envStart._2),
         ("ts_end", java.time.Instant.now().toString), ("load_end", loadavg())),
       baseline = r1Baseline().map(b =>
@@ -116,6 +118,18 @@ object Bench {
     catch { case _: Throwable => () }
     spark.stop()
   }
+
+  /** Wall seconds of `iters` (at least one) runs of `body`. A run that
+    * throws fails the whole measurement: its elapsed time is the time to
+    * fail, not a sample of the face, so no time is kept and the error
+    * (class and message, truncated) is returned instead. */
+  private[graft] def timed(iters: Int)(body: => Any): Either[String, Seq[Double]] =
+    try Right((0 until math.max(1, iters)).map { _ =>
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    })
+    catch { case e: Throwable => Left(e.toString.take(200)) }
 
   /** Catalog rows that must KEEP the window plan: `q_topk_window` exists
     * as the window-vs-aggregate comparison row, so with the optimizer rule
@@ -273,11 +287,13 @@ object Bench {
     * per-query spread — machine drift vs code signal — is readable
     * without re-measuring, and which queries hit the outlier re-run pass
     * (`retimed`) and the machine-phase bracket (`env`: loadavg + wall
-    * timestamps at timed-pass start/end); the stdout schema is
-    * unchanged. */
+    * timestamps at timed-pass start/end), and the faces that threw
+    * (`failed`: named here, absent from both time maps); the stdout
+    * schema is unchanged. */
   private[graft] def metricLine(results: Seq[(String, Double)], sfDir: String,
       maxBytes: Int = 1900, maxes: Seq[(String, Double)] = Nil,
       retimed: Seq[String] = Nil,
+      failed: Seq[String] = Nil,
       env: Seq[(String, String)] = Nil,
       baseline: Option[String] = None): (String, String) = {
     val total = results.map(_._2).sum
@@ -294,6 +310,8 @@ object Bench {
       else s""","queries_max":${qmap(maxes)}""") +
       (if (retimed.isEmpty) ""
       else retimed.map("\"" + _ + "\"").mkString(""","retimed":[""", ",", "]")) +
+      (if (failed.isEmpty) ""
+      else failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")) +
       (if (env.isEmpty) ""
       else env.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
         .mkString(""","env":{""", ",", "}"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.GraftFunctions._
-import graft.operators.WeatherOps
+import graft.operators.{Staging, WeatherOps}
 
 /** The reference operator surface (SURVEY.md §2) + the relational core, as
   * oracle-checked queries over the driver fixtures.
@@ -466,7 +466,6 @@ object CoreQueries {
     // ledger and the final join must read the same partition
     // assignment).
     "q_median_exact" -> ((s, dir) => {
-      import graft.operators.Staging
       val o = Tables.orders(s, dir).select(col("o_orderpriority"),
         col("o_totalprice"), col("o_orderkey"))
       val parts = s.sessionState.conf.numShufflePartitions
@@ -952,12 +951,22 @@ object CoreQueries {
         .orderBy(col("event_type"))
     }),
 
+    // two-level aggregate: the (event_type, user_id) pairs first, then
+    // per type the HLL sketch, the exact distinct count (non-null users
+    // over the distinct pairs) and the row count (sum of pair counts).
+    // HLL registers take a max, so feeding it each user once gives the
+    // same estimate as feeding it every event. Two plain aggregates
+    // replace Spark's four-operator single-distinct plan, and spread by
+    // event_type, both levels and the final sort run on the range
+    // partitioning with no exchange of their own.
     "q_approx_distinct" -> ((s, dir) =>
-      Tables.events(s, dir)
+      Staging.spread(Tables.events(s, dir), col("event_type"))
+        .groupBy(col("event_type"), col("user_id"))
+        .agg(count(lit(1)).as("c"))
         .groupBy(col("event_type"))
         .agg(approx_count_distinct(col("user_id"), 0.01).as("approx_users"),
-          countDistinct(col("user_id")).as("exact_users"),
-          count(lit(1)).as("n"))
+          count(col("user_id")).as("exact_users"),
+          sum(col("c")).as("n"))
         .select(col("event_type"), col("n"), col("exact_users"),
           (abs(col("approx_users") - col("exact_users")).cast("double") <=
             col("exact_users").cast("double") * 0.05).as("approx_ok"))

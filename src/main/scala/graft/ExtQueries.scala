@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bpe, Dedup, EmbeddingPrep, Funnel, Fuzzy, Graph, Keywords, Links, Multimodal, PageMeta, Profile, Recrawl, Robots, Similarity, TextAnalysis, TextPrep, Unigram, Urls, Video, WordPiece}
+import graft.operators.{Bpe, Dedup, EmbeddingPrep, Funnel, Fuzzy, Graph, Keywords, Links, Multimodal, PageMeta, Profile, Recrawl, Robots, Similarity, Staging, TextAnalysis, TextPrep, Unigram, Urls, Video, WordPiece}
 
 /** North-star extension queries (SURVEY.md §2.10): dedup, similarity search,
   * text analysis, multimodal — over `documents` / `embeddings`.
@@ -393,6 +393,13 @@ object ExtQueries {
           "</head><body><p>url=http://nope.example.com/</p>" +
           "</body></html>")))
   }
+
+  /** The documents table range-spread by `doc_id` for the per-row text
+    * kernels whose result is ordered by `doc_id`: the kernel then runs
+    * once, in `defaultParallelism` tasks, and the final sort plans no
+    * exchange of its own ([[Staging.spread]]). */
+  private def docsByDocId(s: SparkSession, dir: String): DataFrame =
+    Staging.spread(Tables.documents(s, dir), col("doc_id"))
 
   /** Planted pages for q_html_markdown — every [[TextPrep.MarkdownRules]]
     * branch live off doc_id mod classes: heading level cycles 1–6, the
@@ -3677,7 +3684,7 @@ object ExtQueries {
       val planted = element_at(array(scriptMixTails.map(lit): _*),
         (col("doc_id") % 5).cast("int") + 1)
       TextAnalysis.scriptMix(
-        Tables.documents(s, dir)
+        docsByDocId(s, dir)
           .withColumn("text", concat(col("text"), planted)))
         .select(col("doc_id"), col("n_latin"), col("n_cyrillic"),
           col("n_greek"), col("n_han"), col("n_arabic"),
@@ -3845,7 +3852,7 @@ object ExtQueries {
     // UTF-8 decode) must recover the true string byte-for-byte
     // (md5-gated) while leaving the clean class untouched
     "q_mojibake" -> ((s, dir) => {
-      val planted = Tables.documents(s, dir).select(col("doc_id"),
+      val planted = docsByDocId(s, dir).select(col("doc_id"),
         concat(col("text"), element_at(array(
             lit(" cafÃ© bar"), lit(" donâ€™t go"),
             lit(" Ã¼ber alles"), lit(" clean tail")),
@@ -4169,13 +4176,13 @@ object ExtQueries {
     // semantic (horizontal-only collapse). The oracle applies the SAME
     // pattern/template chain, rendered for RE2's \n group syntax
     "q_html_markdown" -> ((s, dir) =>
-      TextPrep.htmlToMarkdown(markdownPages(Tables.documents(s, dir)))
+      TextPrep.htmlToMarkdown(markdownPages(docsByDocId(s, dir)))
         .select(col("doc_id"), col("markdown"))
         .orderBy(col("doc_id"))),
 
     "q_main_content" -> ((s, dir) =>
       TextPrep.mainContent(
-        Tables.documents(s, dir).withColumn("html", concat(
+        docsByDocId(s, dir).withColumn("html", concat(
           lit("<html><head><script>var z = 9;</script><title>T</title>" +
             "</head><body>"),
           lit("<header>Site "), col("source"), lit("</header>"),
@@ -4628,7 +4635,7 @@ object ExtQueries {
     // mislabeled-page evidence a multilingual corpus filter needs
     // before trusting site metadata
     "q_lang_audit" -> ((s, dir) => {
-      val pages = Tables.documents(s, dir)
+      val pages = docsByDocId(s, dir)
         .withColumn("url", concat(lit("http://"), col("source"),
           lit(".example.com/l/"), col("doc_id").cast("string")))
         .withColumn("html", concat(
@@ -6152,7 +6159,7 @@ object ExtQueries {
     // exercised (the fixture corpus itself is clean)
     "q_pii_redact" -> ((s, dir) =>
       TextPrep.redactPii(
-        Tables.documents(s, dir).withColumn("text", concat(
+        docsByDocId(s, dir).withColumn("text", concat(
           col("text"), lit(" contact user"), col("doc_id").cast("string"),
           lit("@example.com or 10.0."), (col("doc_id") % 256).cast("string"),
           lit(".7 tel 555-123-4567"))))

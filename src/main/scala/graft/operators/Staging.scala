@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Shared materialization point for consumer-diamond staging relations.
   *
@@ -95,10 +95,36 @@ object Staging {
     * carries >= cores splits and NO exchange is inserted — the floor
     * is self-retiring. Row-preserving; callers must be
     * partitioning-insensitive (all graft operators are: outputs are
-    * ordered or aggregate-final). */
-  def spread(df: DataFrame): DataFrame = {
+    * ordered or aggregate-final).
+    *
+    * With a `sortKey` — the key of the caller's final `orderBy`, or a
+    * subset of its grouping keys — the input is range-partitioned on it
+    * instead, always, to `max(defaultParallelism, splits)` partitions.
+    * The result's sort (or aggregation) then finds its distribution
+    * already satisfied and plans no exchange of its own. This fixes two
+    * costs of the plain shape `scan → per-row kernel → orderBy(key)`:
+    *  - Double evaluation. The sort's range exchange sits ABOVE the
+    *    kernel projection, and a range exchange runs its input twice:
+    *    once in the `RangePartitioner` sample job that picks the bounds,
+    *    and again in the map stage. A regex or decoding kernel below it
+    *    therefore runs over every row twice. Range-partitioning the scan
+    *    moves the sample below the kernel, where it reads the scan only.
+    *  - One task. A small file is one scan split, so the kernel runs in
+    *    one task; and AQE coalesces a small shuffle to a single task
+    *    unless its partition count is explicit (`REPARTITION_BY_NUM`),
+    *    so the sort after it runs in one task too. The keyed form always
+    *    passes the count, so AQE keeps every partition, and the kernel,
+    *    now above the exchange, runs on every core.
+    * The exchange is inserted even when the scan already has `floor` or
+    * more splits: the caller's sort would shuffle anyway, so at any
+    * scale this moves that one exchange below the kernel rather than
+    * adding one. A key with few distinct values (an event type) fills
+    * only that many partitions; the rest stay empty and cost nothing. */
+  def spread(df: DataFrame, sortKey: Column*): DataFrame = {
     val floor = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < floor) df.repartition(floor) else df
+    val splits = df.rdd.getNumPartitions
+    if (sortKey.nonEmpty) df.repartitionByRange(math.max(floor, splits), sortKey: _*)
+    else if (splits < floor) df.repartition(floor) else df
   }
 
   /** Like [[stage]] with a directory, but also returns the staged path —

@@ -70,6 +70,31 @@ class BenchMetricSpec extends AnyFunSuite {
     assert(parsed.path("env").path("ts_end").asText() == "2026-08-13T10:01:00Z")
   }
 
+  test("a face that throws is a failure, not a fast sample") {
+    // the throw lands on the second run: the first run's time must not
+    // survive as a sample either
+    var runs = 0
+    val thrown = Bench.timed(3) {
+      runs += 1
+      if (runs == 2) throw new IllegalStateException("boom")
+    }
+    assert(thrown == Left("java.lang.IllegalStateException: boom"))
+    assert(runs == 2, "timing stops at the first failure")
+    val ok = Bench.timed(2)(Thread.sleep(5))
+    assert(ok.exists(ts => ts.size == 2 && ts.forall(_ >= 0.005)), ok.toString)
+    // a failed face is named on the file line and timed nowhere
+    val (printed, full) = Bench.metricLine(Seq("q_a" -> 1.0), "/sf",
+      maxes = Seq("q_a" -> 1.5), failed = Seq("q_bad"))
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readTree(full)
+    assert(parsed.path("failed").size() == 1 &&
+      parsed.path("failed").get(0).asText() == "q_bad")
+    assert(parsed.path("queries").path("q_bad").isMissingNode &&
+      parsed.path("queries_max").path("q_bad").isMissingNode)
+    assert(parsed.path("value").asDouble() == 1.0)
+    assert(!printed.contains("failed") && !printed.contains("q_bad"),
+      "stdout line schema must not grow")
+  }
+
   test("baseline block: both ratios, capped breach list, and it rides the stdout line") {
     val base = Map("q_a" -> 1.0, "q_b" -> 2.0, "q_gone" -> 3.0)
     val cur = Seq("q_a" -> 1.0, "q_b" -> 5.0, "q_new" -> 4.0)

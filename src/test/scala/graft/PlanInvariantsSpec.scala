@@ -715,4 +715,47 @@ class PlanInvariantsSpec extends SparkSuite {
     assert(bq.contains("BroadcastExchange"),
       s"the query side must broadcast:\n${bq.take(2000)}")
   }
+
+  test("batch-kernel faces: one range spread below the kernel, none between it and the sort") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    // walks into AQE query stages, which plain `collect` treats as leaves
+    object Aqe extends AdaptiveSparkPlanHelper
+    Seq("q_mojibake", "q_lang_audit", "q_main_content", "q_pii_redact",
+        "q_script_mix", "q_html_markdown", "q_approx_distinct").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sf0001)
+      df.collect() // runs the adaptive plan to its final form
+      val fin = df.queryExecution.executedPlan
+      val shown = fin.toString.take(3000)
+      val exchanges = Aqe.collect(fin) { case e: ShuffleExchangeExec => e }
+      // the spread is the ONLY shuffle: the final sort (and, for the
+      // sketch face, both aggregation levels) reuse its partitioning
+      assert(exchanges.size == 1, s"$name: expected one exchange:\n$shown")
+      val ex = exchanges.head
+      assert(ex.shuffleOrigin == REPARTITION_BY_NUM &&
+        ex.outputPartitioning.isInstanceOf[RangePartitioning],
+        s"$name: the exchange must be the explicit-count range spread:\n$shown")
+      assert(!shown.contains("hashpartitioning"), s"$name: hash exchange:\n$shown")
+      // the kernel is above the exchange: below it only the scan and
+      // column pruning, so the range-sample job reads the scan alone
+      def computes(p: SparkPlan): Boolean = p match {
+        case pr: ProjectExec => pr.projectList.exists {
+          case _: Attribute => false
+          case Alias(_: Attribute, _) => false
+          case _ => true
+        }
+        case _ => false
+      }
+      assert(Aqe.find(ex.child)(computes).isEmpty,
+        s"$name: a computed column below the spread:\n$shown")
+      // and the global sort sits above it with no exchange in between
+      val sorts = Aqe.collect(fin) { case s: SortExec if s.global => s }
+      assert(sorts.size == 1 &&
+        Aqe.collect(sorts.head) { case e: ShuffleExchangeExec => e } == Seq(ex),
+        s"$name: the final sort must read the spread's partitioning:\n$shown")
+    }
+  }
 }

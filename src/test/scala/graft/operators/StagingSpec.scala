@@ -38,6 +38,39 @@ class StagingSpec extends SparkSuite {
       "at or above the floor spread must be the identity")
   }
 
+  test("spread by a sort key: range-partitions at any split count; the sort adds no exchange") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    object Aqe extends AdaptiveSparkPlanHelper
+    def exchanges(df: DataFrame): Seq[ShuffleExchangeExec] = {
+      df.collect() // the final adaptive plan exists only once it has run
+      Aqe.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+    }
+    val floor = spark.sparkContext.defaultParallelism
+    // repeated keys: the multiset, not just the key set, must survive
+    val rows = (0L until 200L).map(i => (i % 37, s"t$i"))
+    val narrow = rows.toDF("doc_id", "text").coalesce(1)
+    // an input already at or above the floor is range-partitioned too,
+    // to its own split count: the sort would shuffle it anyway
+    val wide = rows.toDF("doc_id", "text").repartition(floor + 3)
+    Seq(narrow -> floor, wide -> (floor + 3)).foreach { case (in, parts) =>
+      val keyed = Staging.spread(in, $"doc_id")
+      assert(keyed.as[(Long, String)].collect().sorted.toSeq == rows.sorted,
+        "row multiset must be unchanged")
+      val spread = exchanges(keyed).filter(_.outputPartitioning.isInstanceOf[RangePartitioning])
+      assert(spread.size == 1 && spread.head.shuffleOrigin == REPARTITION_BY_NUM &&
+        spread.head.outputPartitioning.numPartitions == parts,
+        keyed.queryExecution.executedPlan.toString)
+      // a per-row projection and the sort on the key add no exchange
+      val sorted = keyed.withColumn("n", length($"text")).orderBy($"doc_id")
+      assert(sorted.select($"doc_id").as[Long].collect().toSeq == rows.map(_._1).sorted)
+      assert(exchanges(sorted).size == exchanges(keyed).size,
+        sorted.queryExecution.executedPlan.toString)
+    }
+  }
+
   test("stage: same logical name twice under one dir → two distinct tables") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stg").toString
     try {
